@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from us_equity_datalake_spark.equity.daily_job import LakePaths, run_daily_update
+from us_equity_datalake_spark.sources.lake import _exists
 
 D = dt.date
 
@@ -266,6 +267,11 @@ def _fund_days(spark):
     return day1, day2
 
 
+def _rows_of(spark, path):
+    # a zero-row partitioned table has no schema-bearing files: no rows
+    return sorted(map(str, spark.read.parquet(path).collect())) if _exists(path) else []
+
+
 def test_incremental_derived_rebuild_matches_full(spark, tmp_path):
     """Bucket-incremental derived maintenance: a day-2 batch touching one
     symbol rebuilds only that symbol's bucket, and the resulting TTM/metrics
@@ -282,14 +288,8 @@ def test_incremental_derived_rebuild_matches_full(spark, tmp_path):
     update_fundamentals(spark, full, day1, incremental=False)
     update_fundamentals(spark, full, day2, incremental=False)
 
-    def rows_of(path):
-        try:  # a zero-row partitioned table has no schema-bearing files
-            return sorted(map(str, spark.read.parquet(path).collect()))
-        except Exception:
-            return []
-
     for sub in ("derived/ttm", "derived/metrics"):
-        assert rows_of(f"{inc.root}/{sub}") == rows_of(f"{full.root}/{sub}"), sub
+        assert _rows_of(spark, f"{inc.root}/{sub}") == _rows_of(spark, f"{full.root}/{sub}"), sub
     # AAA completed 4 quarters on day 2 -> a TTM row exists
     assert spark.read.parquet(f"{inc.root}/derived/ttm").filter("symbol = 'AAA'").count() == 1
 
@@ -323,14 +323,8 @@ def test_premigration_unpartitioned_lake_self_heals(spark, tmp_path):
     update_fundamentals(spark, full, day1, incremental=False)
     update_fundamentals(spark, full, day2, incremental=False)
 
-    def rows_of(path):
-        try:  # a zero-row partitioned table has no schema-bearing files
-            return sorted(map(str, spark.read.parquet(path).collect()))
-        except Exception:
-            return []
-
     for sub in ("raw/fundamental", "derived/ttm", "derived/metrics"):
-        assert rows_of(f"{legacy.root}/{sub}") == rows_of(f"{full.root}/{sub}"), sub
+        assert _rows_of(spark, f"{legacy.root}/{sub}") == _rows_of(spark, f"{full.root}/{sub}"), sub
 
     # and the NEXT day runs incrementally against the healed lake
     day3 = spark.createDataFrame(_fund_raw_rows("BBB", [(2023, 4)], val=200.0), _FUND_SCHEMA)
@@ -367,14 +361,8 @@ def test_bucket_count_mismatch_self_heals(spark, tmp_path):
     update_fundamentals(spark, full, day1, incremental=False, n_buckets=64)
     update_fundamentals(spark, full, day2, incremental=False, n_buckets=64)
 
-    def rows_of(path):
-        try:  # a zero-row partitioned table has no schema-bearing files
-            return sorted(map(str, spark.read.parquet(path).collect()))
-        except Exception:
-            return []
-
     for sub in ("raw/fundamental", "derived/ttm", "derived/metrics"):
-        assert rows_of(f"{lk.root}/{sub}") == rows_of(f"{full.root}/{sub}"), sub
+        assert _rows_of(spark, f"{lk.root}/{sub}") == _rows_of(spark, f"{full.root}/{sub}"), sub
 
     # next day at the SAME modulus goes back to the incremental path
     day3 = spark.createDataFrame(_fund_raw_rows("BBB", [(2023, 4)], val=200.0), _FUND_SCHEMA)
@@ -395,10 +383,9 @@ def test_security_master_export_stamps_and_fast_path(spark, tmp_path):
     from us_equity_datalake_spark.sources.lake import read_table_metadata
 
     lake = LakePaths(str(tmp_path / "lk"))
-    universe = spark.createDataFrame([("AAA",), ("BBB",)], "symbol string")
     figi = spark.createDataFrame([("AAA", "FG1")], "symbol string, figi string")
 
-    r = update_security_master(spark, lake, universe, figi, target_date="2024-03-01")
+    r = update_security_master(spark, lake, ["AAA", "BBB"], figi, target_date="2024-03-01")
     meta = read_table_metadata(lake.security_master)
     assert meta["asof"] == "2024-03-01"
     assert meta["row_count"] == r["master_rows"] == 2
@@ -428,3 +415,136 @@ def test_security_master_export_stamps_and_fast_path(spark, tmp_path):
 
     with _pytest.raises(RuntimeError):
         load_security_master(spark, lake, target_date="2025-01-01")
+
+
+def _snap(spark, *tickers):
+    return spark.createDataFrame(
+        [Row(ticker=t, name=f"{t} Corp Common Stock", etf="N", test_issue="N") for t in tickers],
+        "ticker string, name string, etf string, test_issue string",
+    )
+
+
+def test_zero_ticker_day_through_run_daily_update(spark, tmp_path):
+    """A day whose snapshot filters down to no tickers runs every universe
+    stage (no schema inference from an empty list) and the next day diffs
+    against the empty state."""
+    lake = LakePaths(str(tmp_path / "lake_zero"))
+    figi = spark.createDataFrame([Row(symbol="AAA", figi="BBG-A")], "symbol string, figi string")
+
+    run_daily_update(spark, lake, target_date="2024-06-07",
+                     universe_snapshot=_snap(spark, "AAA", "BBB"), figi_map=figi)
+    r2 = run_daily_update(spark, lake, target_date="2024-06-10",
+                          universe_snapshot=_snap(spark), figi_map=figi)
+    assert r2["universe_size"] == 0 and r2["universe_changes"] == 2  # both disappeared
+    assert r2["master_rows"] == 2 and r2["master_new_rows"] == 0
+    r3 = run_daily_update(spark, lake, target_date="2024-06-11",
+                          universe_snapshot=_snap(spark, "AAA"), figi_map=figi)
+    assert r3["universe_size"] == 1 and r3["universe_changes"] == 1
+    # AAA appeared against an empty state with no FIGI match: a new IPO row
+    assert r3["master_rows"] == 3 and r3["master_new_rows"] == 1
+
+
+def test_universe_changes_with_duplicate_and_vanished_tickers(spark, tmp_path):
+    """universe_changes is the symmetric difference of the two ticker lists:
+    a ticker repeated in the snapshot counts once, and every ticker of the
+    previous state that is absent today counts as a change."""
+    import json
+    import os
+
+    lake = LakePaths(str(tmp_path / "lake_diff"))
+    os.makedirs(os.path.dirname(lake.universe_state))
+    with open(lake.universe_state, "w") as fh:
+        json.dump({"asof": "2024-06-06", "tickers": ["AAA", "YYY", "ZZZ"]}, fh)
+
+    r = run_daily_update(spark, lake, target_date="2024-06-07",
+                         universe_snapshot=_snap(spark, "AAA", "AAA", "NEW", "NEW"))
+    assert r["universe_size"] == 2  # AAA, NEW: duplicates collapse
+    assert r["universe_changes"] == 3  # NEW appeared; YYY, ZZZ disappeared
+
+
+def test_security_master_rule_plan_runs_once(spark, tmp_path, monkeypatch):
+    """The security-master rule plan (security_master.update_universe) is
+    executed once per day: every row of its result passes a counting probe
+    exactly once, across the dedup, the checkpoint and the counts."""
+    from us_equity_datalake_spark.equity import security_master
+
+    lake = LakePaths(str(tmp_path / "lake_once"))
+    figi = spark.createDataFrame(
+        [Row(symbol="AAA", figi="BBG-A"), Row(symbol="AAANEW", figi="BBG-A"),
+         Row(symbol="IPOX", figi="BBG-X")],
+        "symbol string, figi string",
+    )
+    run_daily_update(spark, lake, target_date="2024-06-07",
+                     universe_snapshot=_snap(spark, "AAA", "BBB"), figi_map=figi)
+
+    seen = spark.sparkContext.accumulator(0)
+    rules = security_master.update_universe
+
+    def probed(*args, **kwargs):
+        def count_row(_symbol):
+            seen.add(1)
+            return True
+
+        probe = F.udf(count_row, "boolean").asNondeterministic()
+        return rules(*args, **kwargs).filter(probe(F.col("symbol")))
+
+    monkeypatch.setattr(security_master, "update_universe", probed)
+    r = run_daily_update(spark, lake, target_date="2024-06-10",
+                         universe_snapshot=_snap(spark, "AAANEW", "BBB", "IPOX"), figi_map=figi)
+    assert r["master_new_rows"] == 2 and r["master_rows"] == 4
+    # AAA and BBB passed through, the AAANEW continuation, the IPOX IPO
+    assert seen.value == 4
+
+
+def test_incremental_day_lists_the_lake_once(spark, tmp_path, monkeypatch):
+    """One incremental day with a resend: the fundamental lake is read once
+    per update_fundamentals call, only the new rows land, and the derived
+    tables equal a from-scratch full rebuild over all the data."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from us_equity_datalake_spark.equity.daily_job import update_fundamentals
+
+    day1, day2 = _fund_days(spark)
+    resend = day2.unionByName(day1.filter("symbol = 'AAA'"))  # AAA's Q1-Q3 again
+    inc, scratch = LakePaths(str(tmp_path / "inc")), LakePaths(str(tmp_path / "scratch"))
+    update_fundamentals(spark, inc, day1)
+
+    paths: list = []
+    read_parquet = DataFrameReader.parquet
+
+    def counting(self, *args, **kwargs):
+        paths.extend(args)
+        return read_parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    r = update_fundamentals(spark, inc, resend)
+    monkeypatch.undo()
+    assert paths.count(inc.fundamental) == 1, paths
+    assert r["fundamental_appended"] == 1  # only Q4; the resent quarters dedup
+    assert 0 < r["derived_buckets_rebuilt"] < 64
+
+    update_fundamentals(spark, scratch, day1.unionByName(day2), incremental=False)
+
+    for sub in ("raw/fundamental", "derived/ttm", "derived/metrics"):
+        assert _rows_of(spark, f"{inc.root}/{sub}") == _rows_of(spark, f"{scratch.root}/{sub}"), sub
+    assert r["ttm_rows"] == len(_rows_of(spark, inc.ttm)) == 1
+
+
+def test_both_derived_writes_failing_surface_both(spark, tmp_path, monkeypatch, caplog):
+    """When the concurrent ttm and metrics writes both fail, the ttm failure
+    is raised and the metrics failure is logged and noted on it."""
+    import logging
+    import os
+
+    from us_equity_datalake_spark.equity import daily_job
+
+    def failing_write(df, path, **kwargs):
+        raise RuntimeError(f"write failed: {os.path.basename(path)}")
+
+    monkeypatch.setattr(daily_job, "write_partitioned", failing_write)
+    day1, _ = _fund_days(spark)
+    with caplog.at_level(logging.ERROR, logger=daily_job.__name__):
+        with pytest.raises(RuntimeError, match="write failed: ttm") as err:
+            daily_job.update_fundamentals(spark, LakePaths(str(tmp_path / "fail")), day1)
+    assert any("write failed: metrics" in note for note in err.value.__notes__)
+    assert [str(rec.exc_info[1]) for rec in caplog.records] == ["write failed: metrics"]

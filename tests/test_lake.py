@@ -171,3 +171,43 @@ def test_small_file_report_flags_fragmented_partition(spark, tmp_path):
     assert rep2["year=2024"]["n_files"] == 1
     assert not rep2["year=2024"]["needs_compaction"]
     assert spark.read.parquet(path).count() == 100
+
+
+def test_exists_answers_from_the_file_system(spark, tmp_path):
+    """_exists is True only for a committed table, answered by a file-system
+    walk: False for a missing path, a zero-row partitioned write (no
+    schema-bearing file) and a crashed write's leftover _temporary/ part
+    file, and no call starts a Spark job."""
+    import os
+    import shutil
+    import time
+
+    from us_equity_datalake_spark.sources.lake import _exists
+
+    committed, empty = str(tmp_path / "committed"), str(tmp_path / "empty")
+    write_partitioned(_ticks(spark, 2024), committed, partition_by=["year"])
+    write_partitioned(_ticks(spark, 2024).limit(0), empty, partition_by=["year"])
+    assert os.path.isdir(empty)
+    crashed = tmp_path / "crashed" / "_temporary" / "0" / "task_0"
+    crashed.mkdir(parents=True)
+    shutil.copy(glob.glob(f"{committed}/year=2024/*.parquet")[0], crashed / "part-00000.parquet")
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("lake-exists-probe", "_exists calls")
+        got = {name: _exists(str(tmp_path / name))
+               for name in ("missing", "committed", "empty", "crashed")}
+        # control: a Spark read in a later group; listener events arrive in
+        # order, so once its job is visible any job _exists started is too
+        sc.setJobGroup("lake-exists-control", "a Spark read")
+        spark.read.parquet(committed).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("lake-exists-control") and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("lake-exists-control")
+    assert got == {"missing": False, "committed": True, "empty": False, "crashed": False}
+    assert tracker.getJobIdsForGroup("lake-exists-probe") == []

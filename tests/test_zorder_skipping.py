@@ -85,15 +85,22 @@ def _layout_diag(path: str) -> str:
         if not f.endswith(".parquet"):
             continue
         md = pq.ParquetFile(os.path.join(path, f)).metadata
-        rows = md.num_rows
-        sx = [md.row_group(i).column(0).statistics for i in range(md.num_row_groups)]
-        sy = [md.row_group(i).column(1).statistics for i in range(md.num_row_groups)]
         lines.append(
-            f"{f}: rows={rows} rgs={md.num_row_groups} "
-            f"x=[{min(s.min for s in sx)},{max(s.max for s in sx)}] "
-            f"y=[{min(s.min for s in sy)},{max(s.max for s in sy)}]"
+            f"{f}: rows={md.num_rows} rgs={md.num_row_groups} "
+            f"x={_footer_range(md, 'x')} y={_footer_range(md, 'y')}"
         )
     return "\n".join(lines)
+
+
+def _footer_range(md, name: str) -> str:
+    """[min,max] of column ``name`` over a file's row groups, looked up by
+    name; "no stats" when any row group lacks statistics, so the diagnostic
+    can never raise in place of the assert it decorates."""
+    idx = md.schema.names.index(name)
+    stats = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
+    if not stats or any(s is None or not s.has_min_max for s in stats):
+        return "no stats"
+    return f"[{min(s.min for s in stats)},{max(s.max for s in stats)}]"
 
 
 def test_scan_row_group_pruning_orders_the_three_layouts(spark, layouts):

@@ -15,6 +15,7 @@ this module is pure compute + lake writes — no network.
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass
 
@@ -25,10 +26,17 @@ from us_equity_datalake_spark.operators._cache import materialize_once
 from us_equity_datalake_spark.equity.metrics import compute_metrics_long
 from us_equity_datalake_spark.equity.sentiment import aggregate_filing_sentiment, chunk_text_udf, score_chunks
 from us_equity_datalake_spark.equity.ttm import compute_ttm_long
-from us_equity_datalake_spark.equity.universe import filter_universe, universe_transition
-from us_equity_datalake_spark.sources.lake import overwrite_partition, read_check_append, write_partitioned
+from us_equity_datalake_spark.equity.universe import filter_universe
+from us_equity_datalake_spark.sources.lake import (
+    _exists as _table_exists,
+    overwrite_partition,
+    read_check_append,
+    write_partitioned,
+)
 from us_equity_datalake_spark.sources.ingest import read_json_state, write_json_state
 from us_equity_datalake_spark.sources.registry import local_frame
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -74,23 +82,15 @@ def _exists(path: str) -> bool:
 
 def update_universe(spark: SparkSession, lake: LakePaths, snapshot: DataFrame, *, target_date: str) -> dict:
     """Stage 1 (app.py:976-1051 + security_master.update_from_sec): filter the
-    raw directory snapshot, diff against yesterday's state, persist both."""
+    raw directory snapshot, diff against yesterday's state, persist both.
+
+    ``universe_changes`` counts the tickers that appeared or disappeared:
+    the symmetric difference of yesterday's and today's ticker lists, both
+    already on the driver, so the diff costs no Spark job."""
     cur = filter_universe(snapshot)
     tickers = sorted(r.ticker for r in cur.select("ticker").collect())
     prev_state = read_json_state(lake.universe_state)
-    n_changes = 0
-    if prev_state:
-        # explicit schema: createDataFrame cannot infer types from an empty
-        # ticker list (a zero-ticker day must not abort the next day's run)
-        from pyspark.sql import types as T
-
-        prev = local_frame(
-            spark,
-            [(t,) for t in prev_state["tickers"]],
-            T.StructType([T.StructField("ticker", T.StringType())]),
-        )
-        diff = universe_transition(prev, cur.select("ticker"), key="ticker", as_of=target_date)
-        n_changes = diff.filter(F.col("status") != "still_active").count()
+    n_changes = len(set(prev_state["tickers"]) ^ set(tickers)) if prev_state else 0
     os.makedirs(os.path.dirname(lake.universe_state), exist_ok=True)
     write_json_state(lake.universe_state, {"asof": target_date, "tickers": tickers})
     return {"universe_size": len(tickers), "universe_changes": n_changes}
@@ -214,8 +214,14 @@ def update_fundamentals(
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
 
-    if _exists(lake.fundamental):
-        existing = spark.read.parquet(lake.fundamental)
+    # The lake is listed ONCE per call (64 bucket directories put every
+    # listing past Spark's parallel-discovery threshold: a Spark job each).
+    # This one read serves the migration guard, the dedup probe inside the
+    # append and — unioned with the appended rows — the derived rebuild.
+    existing = (
+        spark.read.parquet(lake.fundamental) if _table_exists(lake.fundamental) else None
+    )
+    if existing is not None:
         meta = read_table_metadata(lake.fundamental) or {}
         if "sym_bucket" not in existing.columns or meta.get("n_sym_buckets") != n_buckets:
             # Migrate via write-aside + two renames (NOT rmtree-then-rename:
@@ -232,34 +238,38 @@ def update_fundamentals(
             os.rename(tmp, lake.fundamental)
             shutil.rmtree(old)
             incremental = False
+            # the migration moved every file: the only second listing
+            existing = spark.read.parquet(lake.fundamental)
     # the batch's touched buckets, computed ONCE: they prune both the dedup
     # probe inside the append (key = (symbol, ...) and bucket = f(symbol), so
     # keys outside these partitions cannot collide with the batch — the
     # existing_filter contract in read_check_append) and the derived rebuild.
     # Skipped on a fresh lake (nothing to probe, full rebuild anyway).
     touched: list | None = None
-    if _exists(lake.fundamental):
+    if existing is not None:
         touched = sorted(
             r.sym_bucket for r in fund_long.select("sym_bucket").distinct().collect()
         )
-    appended = read_check_append(
+    appended, fresh = read_check_append(
         spark, fund_long, lake.fundamental, keys=["symbol", "concept", "frame", "accn"],
         partition_by=["sym_bucket"],
         existing_filter=F.col("sym_bucket").isin(touched) if touched else None,
+        existing=existing, return_fresh=True,
     )
-    if _exists(lake.fundamental):
-        # stamp the layout modulus the lake was (re)written with — the guard
-        # above validates against this on every subsequent call
-        write_table_metadata(spark, lake.fundamental, {"n_sym_buckets": n_buckets})
-    if not _exists(lake.fundamental):
+    if existing is None and not appended:
         # empty fetch day on a fresh lake: nothing was ever written — skip the
         # derived rebuild instead of crashing on a missing path
         return {"fundamental_appended": 0, "ttm_rows": 0, "metric_rows": 0}
+    # stamp the layout modulus the lake was (re)written with — the guard
+    # above validates against this on every subsequent call
+    write_table_metadata(spark, lake.fundamental, {"n_sym_buckets": n_buckets})
 
     do_incremental = (
         incremental and touched is not None and _exists(lake.ttm) and _exists(lake.metrics)
     )
-    full = spark.read.parquet(lake.fundamental)
+    # the pre-append read plus the rows the append just landed (materialized
+    # blocks) is exactly the post-append table, without listing it again
+    full = fresh if existing is None else existing.unionByName(fresh)
     if do_incremental:
         report_buckets = len(touched)
         full = full.filter(F.col("sym_bucket").isin(touched))  # partition-pruned scan
@@ -308,21 +318,25 @@ def update_fundamentals(
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [pool.submit(_land, ttm, lake.ttm),
                     pool.submit(_land, metrics, lake.metrics)]
-        for f in futs:
-            f.result()
+        # surface every failure: raise the first, and log the other (with its
+        # traceback) and note it on the raised one, so neither is lost
+        failed = [e for e in (f.exception() for f in futs) if e is not None]
+        for other in failed[1:]:
+            _log.error("concurrent derived write also failed", exc_info=other)
+            failed[0].add_note(f"the concurrent derived write also failed: {other!r}")
+        if failed:
+            raise failed[0]
 
     if do_incremental:
         with _partition_overwrite_dynamic(spark):
             _land_both()
     else:
         _land_both()
+
     def _count(path: str) -> int:
         # a zero-row partitioned write leaves no schema-bearing files, so the
         # readback cannot infer a schema — that is simply 0 rows
-        try:
-            return spark.read.parquet(path).count()
-        except Exception:
-            return 0
+        return spark.read.parquet(path).count() if _table_exists(path) else 0
 
     return {
         "fundamental_appended": appended,
@@ -338,7 +352,7 @@ def update_fundamentals(
 def update_security_master(
     spark: SparkSession,
     lake: LakePaths,
-    current_universe: DataFrame,
+    current_symbols: list[str],
     figi_map: DataFrame,
     *,
     target_date: str,
@@ -348,40 +362,41 @@ def update_security_master(
     the extend/rebrand/IPO/delist rules against the persisted master using the
     persisted prev-universe state, then re-land both.  First run bootstraps:
     the current universe becomes both the baseline state and (if no master
-    exists) the initial one-row-per-symbol master."""
+    exists) the initial one-row-per-symbol master.
+
+    ``current_symbols`` is today's (filtered) universe as a list of symbols —
+    the ticker list stage 1 already holds on the driver — so every use of it
+    below is a local relation, not a re-derivation of the universe filter.
+    The rule plan runs exactly once: one eager checkpoint, then one count
+    over its blocks yields both the row and the new-row totals."""
+    import datetime as _dt
+
     from us_equity_datalake_spark.equity.security_master import ID_BASE, update_universe as _apply
 
+    symbols = sorted(set(current_symbols))
     state = read_json_state(lake.universe_state + ".master") or {}
     prev_syms, prev_date = state.get("tickers"), state.get("asof")
 
     if _exists(lake.security_master):
         master = spark.read.parquet(lake.security_master)
     else:
-        from pyspark.sql import Window
-
-        today_c = F.lit(target_date).cast("date")
-        master = current_universe.select("symbol").withColumn(
-            "security_id", F.row_number().over(Window.orderBy("symbol")) + F.lit(ID_BASE)
-        ).select(
-            F.col("security_id").cast("long"),
-            F.lit(None).cast("integer").alias("permno"),
-            "symbol",
-            F.lit("").alias("company"),
-            F.lit(None).cast("string").alias("cik"),
-            F.lit(None).cast("string").alias("cusip"),
-            today_c.alias("start_date"),
-            today_c.alias("end_date"),
+        # one row per symbol, sequential ids from ID_BASE + 1 in symbol order
+        today = _dt.date.fromisoformat(target_date)
+        master = local_frame(
+            spark,
+            [(ID_BASE + i, None, sym, "", None, None, today, today)
+             for i, sym in enumerate(symbols, 1)],
+            "security_id long, permno int, symbol string, company string, cik string, "
+            "cusip string, start_date date, end_date date",
         )
 
     if prev_syms is None:
-        updated = master  # bootstrap day: no diff to apply yet
-        n_changes = 0
+        updated = master.withColumn("__new", F.lit(False))  # bootstrap: no diff yet
     else:
-        prev = local_frame(spark, [(s,) for s in prev_syms], "symbol string")
-        updated = _apply(
+        applied = _apply(
             master,
-            prev,
-            current_universe.select("symbol"),
+            local_frame(spark, [(s,) for s in prev_syms], "symbol string"),
+            local_frame(spark, [(s,) for s in symbols], "symbol string"),
             figi_map,
             today=target_date,
             prev_date=prev_date,
@@ -393,26 +408,32 @@ def update_security_master(
         # exactly those not in master on (security_id, symbol, start_date) —
         # existing rows only ever change end_date, continuations reuse the id
         # with a new symbol, IPOs get fresh ids.  A replayed continuation is
-        # bit-identical (dropped by the anti-join); a replayed IPO re-mints a
-        # HIGHER id for a (symbol, start_date) master already holds — drop it.
-        keys = ["security_id", "symbol", "start_date"]
-        appends = updated.join(master.select(*keys), keys, "left_anti")
-        replayed = appends.join(
-            master.select("symbol", "start_date"), ["symbol", "start_date"], "left_semi"
+        # bit-identical to a master row (kept, deduped below); a replayed IPO
+        # re-mints a HIGHER id for a (symbol, start_date) master already
+        # holds — drop it.  One join against the ids master holds per
+        # (symbol, start_date) decides both, so the plan embeds _apply once.
+        held = master.groupBy("symbol", "start_date").agg(
+            F.collect_set("security_id").alias("__held_ids")
         )
-        updated = updated.join(replayed.select(*keys), keys, "left_anti")
-        # a replayed continuation is bit-identical to the master row _apply
-        # passed through, so it appears twice WITHIN updated — (security_id,
-        # symbol, start_date) is the master's natural key, dedup on it
-        updated = updated.dropDuplicates(keys)
-        n_changes = updated.count() - master.count()  # rebrand continuations + IPOs
+        in_master = F.coalesce(F.array_contains("__held_ids", F.col("security_id")), F.lit(False))
+        updated = (
+            applied.join(held, ["symbol", "start_date"], "left")
+            .filter(in_master | F.col("__held_ids").isNull())
+            .select(*master.columns, (~in_master).alias("__new"))
+            # a replayed continuation appears twice WITHIN the result (it and
+            # the master row _apply passed through) — (security_id, symbol,
+            # start_date) is the master's natural key, dedup on it
+            .dropDuplicates(["security_id", "symbol", "start_date"])
+        )
 
     # land via overwrite (the master is one logical partition, dimension-sized).
     # localCheckpoint severs lineage from the files being replaced — a plain
     # cache could recompute from the just-deleted parquet on block eviction
     updated = updated.localCheckpoint(eager=True)
-    n_rows = updated.count()
-    updated.write.mode("overwrite").parquet(lake.security_master)
+    n_rows, n_changes = updated.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.col("__new").cast("int")), F.lit(0))
+    ).first()  # n_changes: rebrand continuations + IPOs
+    updated.drop("__new").write.mode("overwrite").parquet(lake.security_master)
     # Stamp the export sidecar the way the reference stamps custom parquet
     # metadata on every master export (security_master.py:831-840:
     # crsp_end_date / export_timestamp / row_count) — the staleness check in
@@ -426,9 +447,8 @@ def update_security_master(
         lake.security_master,
         {"asof": target_date, "export_timestamp": _time.time(), "row_count": n_rows},
     )
-    tickers = sorted(r.symbol for r in current_universe.select("symbol").distinct().collect())
     os.makedirs(os.path.dirname(lake.universe_state), exist_ok=True)
-    write_json_state(lake.universe_state + ".master", {"asof": target_date, "tickers": tickers})
+    write_json_state(lake.universe_state + ".master", {"asof": target_date, "tickers": symbols})
     return {"master_rows": n_rows, "master_new_rows": n_changes}
 
 
@@ -555,10 +575,11 @@ def run_daily_update(
         report.update(update_universe(spark, lake, universe_snapshot, target_date=target_date))
         if figi_map is not None:
             # stage 1b: lifecycle rules against the persisted master — uses the
-            # FILTERED universe (same common-stock gate as stage 1)
-            cur = filter_universe(universe_snapshot).select(F.col("ticker").alias("symbol"))
+            # FILTERED universe (same common-stock gate as stage 1): the ticker
+            # list stage 1 just collected and persisted, not a re-filter
+            tickers = read_json_state(lake.universe_state)["tickers"]
             report.update(
-                update_security_master(spark, lake, cur, figi_map, target_date=target_date)
+                update_security_master(spark, lake, tickers, figi_map, target_date=target_date)
             )
     if ticks_batch is not None:
         report.update(update_top3000(lake, ticks_batch))

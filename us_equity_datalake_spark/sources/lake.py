@@ -86,9 +86,18 @@ def read_check_append(
     partition_by: list[str] | None = None,
     cache_fresh: bool = True,
     existing_filter=None,
-) -> int:
+    existing: DataFrame | None = None,
+    return_fresh: bool = False,
+):
     """I4: append only rows whose key is absent (anti-join dedup upsert).
-    Returns the number of appended rows.
+    Returns the number of appended rows, or ``(n, fresh)`` with
+    ``return_fresh=True`` — the appended rows themselves (materialized
+    blocks under ``cache_fresh``), so a caller that derives from the table
+    can union them onto its pre-append read instead of listing it again.
+
+    ``existing`` (optional) is the caller's own read of the table at
+    ``path``: the dedup probe uses it instead of listing the table again.
+    Without it the table is read here when it holds committed data.
 
     ``cache_fresh`` (default True) persists the fresh rows across the
     count + write pair: without it the upstream plan executes TWICE — once
@@ -109,8 +118,9 @@ def read_check_append(
     CALLER asserts the filter is key-complete (every new row's key falls
     inside the filtered partitions) — a wrong filter silently re-appends
     duplicates."""
-    if _exists(spark, path):
+    if existing is None and _exists(path):
         existing = spark.read.parquet(path)
+    if existing is not None:
         if existing_filter is not None:
             existing = existing.filter(existing_filter)
         existing_keys = existing.select(*keys).distinct()
@@ -130,7 +140,7 @@ def read_check_append(
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-    return n
+    return (n, fresh) if return_fresh else n
 
 
 def compact_partition(spark: SparkSession, path: str, *, partition_by: list[str],
@@ -172,14 +182,25 @@ def read_table_metadata(path: str) -> dict | None:
         return json.load(f)
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    if not os.path.exists(path):
-        return False
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
+def _hidden(name: str) -> bool:
+    # Spark's file index skips these names: staging dirs of uncommitted
+    # writes (_temporary), markers (_SUCCESS), checksums (.crc) — but not a
+    # partition directory whose column name starts with "_" (it holds "=")
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _exists(path: str) -> bool:
+    """True when ``path`` holds a committed parquet table: at least one
+    ``.parquet`` file outside the entries Spark's file index skips.  A
+    file-system walk that stops at the first hit — no Spark job, no schema
+    inference.  False for a missing path, for a zero-row partitioned write
+    (it leaves only ``_SUCCESS``, no schema-bearing file) and for a
+    directory holding only a crashed write's ``_temporary/`` files."""
+    for _root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        if any(f.endswith(".parquet") and not _hidden(f) for f in files):
+            return True
+    return False
 
 
 def consolidate_year(
@@ -214,7 +235,7 @@ def consolidate_year(
         return {"rows": 0, "status": "skipped"}
     year_df = spark.read.parquet(hot_path).filter(F.col("year") == year)
 
-    if _exists(spark, history_path):
+    if _exists(history_path):
         have = {r.year for r in spark.read.parquet(history_path).select("year").distinct().collect()}
         if year in have and not force:
             raise ValueError(
